@@ -235,11 +235,6 @@ def probes_from_dots(pd: Column, num_planes: int, num_probes: int) -> Column:
     return F.concat(F.array(home), flips)
 
 
-def lsh_bucket(vec: Column, dim: int, num_planes: int = 8) -> Column:
-    """Sign-LSH bucket id: bit h = 1 iff vec · hyperplane_h > 0."""
-    return home_from_dots(plane_dots(vec, dim, num_planes), num_planes)
-
-
 def probe_buckets(
     vec: Column, dim: int, num_planes: int = 8, num_probes: int = 1
 ) -> Column:

@@ -1,22 +1,21 @@
-"""Oracle wiring prep: exact DuckDB twins for operators that land
-WITHOUT registry slots (the `_FIRST` window is at its 50-query cap
-holding the current rotation). Started round 12; each round's
-registrations lift their SQL from here verbatim and the next round's
-candidates take their place.
+"""Spark builders and DuckDB oracle twins behind registered queries.
 
-Each builder here returns the ORACLE SQL a future `@query` row will
-use verbatim; `tests/test_oracle_prep.py` proves bit-equality against
-the Spark operators on the real sf0.001 tables NOW, so registration
-next round is pure wiring. Both twins replay integer arithmetic only
-(the integer-Lloyd / integer-PageRank exactness contract): every
-division is on positive longs, where Spark's ``div`` (truncate) and
-DuckDB's ``//`` (floor) agree.
+Each ``*_oracle_sql`` function or ``*_ORACLE`` snapshot here builds
+the oracle SQL of a registered ``@query`` row in ``queries.py``, and
+each ``*_spark`` function is a Spark builder such a row calls
+(``_OP.<name>``), directly or through a family builder.
+``tests/test_oracle_prep.py`` checks the twins for equality on the
+sf0.001 tables. Both twins replay integer arithmetic only (the
+integer-Lloyd / integer-PageRank exactness contract): every division
+is on positive longs, where Spark's ``div`` (truncate) and DuckDB's
+``//`` (floor) agree.
 """
 
 from __future__ import annotations
 
 from data_frame_spark.operators.drift import PSI_VALUE_SCALE
 from data_frame_spark.operators.text import TOKEN_PATTERN
+from data_frame_spark.session import run_facets
 
 CUSUM_TARGET_MICRO = 500_000
 CUSUM_THRESHOLD_MICRO = 5_000_000
@@ -98,58 +97,6 @@ def pagerank_oracle_sql(iterations: int = 4) -> str:
     return f"{body}\n    SELECT node, r AS rank_micro FROM r{iterations}"
 
 
-def bpe_oracle_sql(n_merges: int = 12) -> str:
-    """DuckDB twin of ``operators/bpe.py:bpe_fit`` over the documents
-    table: the merge loop unrolled into (pair-stats, argmax, merge)
-    CTE triples — the fold replayed with ``list_reduce`` over a
-    list-of-lists accumulator (DuckDB slice bounds are INCLUSIVE, so
-    dropping the accumulator tail is ``[:-2]``), the best pair
-    cross-joined in so the lambda can capture it. Every CTE is
-    MATERIALIZED: each w{k} is referenced twice (pair stats + the
-    next merge), so DuckDB's default inlining re-expands the whole
-    prefix per level — 2^n_merges recomputation (measured: 264 s →
-    0.2 s at sf0.001 with 12 merges). Valid while the
-    corpus sustains ``n_merges`` merges above bpe_fit's ``min_count``
-    (the Spark side should raise if fit stops early, keeping the
-    contract loud); columns quoted — left/right are SQL keywords."""
-    if n_merges < 1:
-        raise ValueError("bpe_oracle_sql needs >= 1 merge")
-    eow = "</w>"
-    parts = [
-        f"""w0 AS MATERIALIZED (
-      SELECT list_append(list_transform(generate_series(1, len(word)),
-                                        i -> word[i]), '{eow}') AS syms,
-             CAST(COUNT(*) AS BIGINT) AS n
-      FROM (SELECT UNNEST(regexp_extract_all(lower(text), '{TOKEN_PATTERN}')) AS word
-            FROM documents)
-      GROUP BY word)"""
-    ]
-    for k in range(1, n_merges + 1):
-        parts.append(
-            f"""p{k} AS MATERIALIZED (
-      SELECT u.pr.l AS l, u.pr.r AS r, CAST(SUM(n) AS BIGINT) AS cnt
-      FROM w{k - 1}, UNNEST(CASE WHEN len(syms) < 2 THEN []
-           ELSE list_transform(generate_series(1, len(syms) - 1),
-                i -> {{'l': syms[i], 'r': syms[i + 1]}}) END) AS u(pr)
-      GROUP BY 1, 2),
-    s{k} AS MATERIALIZED (SELECT l, r, cnt FROM p{k}
-             ORDER BY cnt DESC, l ASC, r ASC LIMIT 1),
-    w{k} AS MATERIALIZED (
-      SELECT CASE WHEN len(syms) < 2 THEN syms
-                  ELSE list_reduce(list_transform(syms, x -> [x]),
-                       (acc, x) -> CASE WHEN acc[-1] = s{k}.l AND x[1] = s{k}.r
-                                        THEN acc[:-2] || [s{k}.l || s{k}.r]
-                                        ELSE acc || x END) END AS syms, n
-      FROM w{k - 1} CROSS JOIN s{k})"""
-        )
-    finals = "\n    UNION ALL ".join(
-        f'SELECT CAST({k - 1} AS BIGINT) AS rank, l AS "left", r AS "right",'
-        f" cnt AS pair_n FROM s{k}"
-        for k in range(1, n_merges + 1)
-    )
-    return "WITH " + ",\n    ".join(parts) + "\n    " + finals
-
-
 # ---------------------------------------------------------------------------
 # Round-13 prep: fastText-style hashed linear classifier inference
 # (operators/classify.py). Weights are a DETERMINISTIC operational
@@ -166,22 +113,30 @@ CLASSIFIER_THRESHOLD_MICRO = 0
 
 
 def bpe_family_oracle_sql(n_merges: int = 12) -> str:
-    """DuckDB twin of the round-13 ``bpe_family`` row: the
-    :func:`bpe_oracle_sql` merge-loop replay with the WORD column
-    carried through every level (the fit-only chain dropped it), so
+    """DuckDB twin of the ``bpe_family`` row over the documents table:
+    ``operators/bpe.py:bpe_fit``'s merge loop unrolled into
+    (pair-stats, argmax, merge) CTE triples — the fold replayed with
+    ``list_reduce`` over a list-of-lists accumulator (DuckDB slice
+    bounds are INCLUSIVE, so dropping the accumulator tail is
+    ``[:-2]``), the best pair cross-joined in so the lambda can
+    capture it. The WORD column is carried through every level, so
     the final level doubles as the word -> subwords vocabulary that
-    the encode facet joins the corpus back onto. Facets:
+    the encode facet joins the corpus back onto. Every CTE is
+    MATERIALIZED: each w{k} is referenced twice (pair stats + the
+    next merge), so DuckDB's default inlining would re-expand the
+    whole prefix per level — 2^n_merges recomputation. Valid while
+    the corpus sustains ``n_merges`` merges above bpe_fit's
+    ``min_count``; columns quoted — left/right are SQL keywords.
+    Facets:
 
-    - 'fit': one row per learned merge (rank, left, right, pair_n) —
-      identical values to bpe_oracle_sql by construction.
+    - 'fit': one row per learned merge (rank, left, right, pair_n).
     - 'encode': per-document subword stream (n_subwords +
       order-preserving md5 over the concatenated subwords), replaying
       ``operators/bpe.py:bpe_encode``'s vocabulary join: corpus words
       in position order joined to the fully-merged vocab, reassembled
       per document; token-free documents emit (0, md5('')).
 
-    Same MATERIALIZED discipline (every w{k} referenced twice);
-    position explode uses generate_series(1, len(wl)) which is empty
+    The position explode uses generate_series(1, len(wl)) which is empty
     in DuckDB when len(wl) = 0 (no inverted-sequence hazard — that
     trap is Spark's sequence()). Every integral SUM output carries
     the outer BIGINT cast; the NULL-superset facet columns are
@@ -658,9 +613,8 @@ def binary_corpus_family_spark(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Round-14 prep: graph analytics twins (operators/graph.py
-# triangle_count + label_propagation). Registration next round is
-# pure wiring once the _FIRST window rotates — the r12/r13 pattern.
+# graph_suite_family: triangles and k-core on the parts-co-ordered graph,
+# LPA and BFS on the part<->supplier graph (operators/graph.py)
 # ---------------------------------------------------------------------------
 
 
@@ -686,11 +640,12 @@ def triangle_edges_sql() -> str:
 
 def _tri_ctes() -> str:
     """The ordered-triple triangle chain (ends in ``tfin``: every
-    node with its COALESCE'd count) — shared by triangle_oracle_sql
-    and the graph_suite family so the two twins can never pin
-    different graphs. CTE names (pe/tn/tri/pern/tfin) are disjoint
-    from the LPA (nodes/l*/c*) and BFS (d*/r*) chains by
-    inspection."""
+    node with its COALESCE'd count). It enumerates ordered triples
+    (x < y < z with all three edges present), a different formulation
+    than the Spark side's degree-ordered orientation, so agreement
+    pins the orientation trick rather than replaying it. CTE names
+    (pe/tn/tri/pern/tfin) are disjoint from the k-core (ke*/kd*/kfin),
+    LPA (nodes/l*/c*) and BFS (d*/r*) chains by inspection."""
     return f"""{triangle_edges_sql().strip().rstrip()},
     tn AS (SELECT u AS node FROM pe UNION SELECT v FROM pe),
     tri AS (SELECT e1.u AS x, e1.v AS y, e2.v AS z
@@ -706,41 +661,10 @@ def _tri_ctes() -> str:
              FROM tn n LEFT JOIN pern p USING (node))"""
 
 
-def triangle_oracle_sql() -> str:
-    """DuckDB twin of ``operators/graph.py:triangle_count`` on the
-    parts-co-ordered graph — deliberately a DIFFERENT formulation
-    than the Spark side's degree-ordered orientation: the oracle
-    enumerates ordered triples (x < y < z with all three edges
-    present), which is correct on any undirected u<v edge list, so
-    agreement pins the orientation trick's correctness rather than
-    replaying it."""
-    return f"""
-    WITH {_tri_ctes()}
-    SELECT node, triangles FROM tfin
-    """
-
-
-def triangle_spark(spark, sf_dir, cooccur_und=None):
-    """The Spark side the future registry row will use verbatim:
-    build the parts-co-ordered edge list (one orderkey-keyed
-    self-join, pair blowup bounded by order size) and run the
-    degree-ordered triangle counter. ``cooccur_und``: an optional
-    pre-canonicalized :func:`_part_cooccur_und` relation (r19) — the
-    graph_suite family shares ONE across its triangle and k-core
-    facets instead of each re-running the scan + self-join +
-    distinct."""
-    from data_frame_spark.operators.graph import triangle_count
-
-    if cooccur_und is not None:
-        return triangle_count(cooccur_und, "u", "v", prepared=True)
-    return triangle_count(_part_cooccur_pairs(spark, sf_dir))
-
-
 def _part_cooccur_pairs(spark, sf_dir):
     """The parts-co-ordered edge list (u < v part pairs sharing an
-    order, every-10th order) — ONE definition shared by the triangle
-    and k-core twins so they can never pin different graphs (the
-    Spark mirror of ``triangle_edges_sql``'s ``pe`` CTE)."""
+    order, every-10th order) — the Spark mirror of
+    ``triangle_edges_sql``'s ``pe`` CTE."""
     from pyspark.sql import functions as F
 
     li = (
@@ -760,14 +684,12 @@ def _part_cooccur_und(spark, sf_dir):
     """The CANONICALIZED undirected form of
     :func:`_part_cooccur_pairs` — exactly the least/greatest +
     null/self-loop drop + distinct that triangle_count and k_core
-    each applied internally (their ``prepared=False`` path), hoisted
-    (r19, guide §2.3) so the graph_suite family builds the
-    scan + self-join + distinct pipeline ONCE, lazily checkpointed,
-    for both facets. The pairs here already satisfy src < dst and
-    non-null by construction, so the fold is a no-op in VALUES — it
-    is kept verbatim so this relation is bit-identical to what each
-    operator would have built internally (equivalence by
-    construction, oracle-gated regardless)."""
+    each apply internally (their ``prepared=False`` path), hoisted so
+    the triangle and k-core facets share ONE scan + self-join +
+    distinct pipeline, lazily checkpointed. The pairs already satisfy
+    src < dst and non-null by construction, so the fold is a no-op in
+    VALUES; it is kept so this relation is bit-identical to what each
+    operator would build internally."""
     from pyspark.sql import functions as F
 
     pairs = _part_cooccur_pairs(spark, sf_dir)
@@ -781,11 +703,10 @@ def _part_cooccur_und(spark, sf_dir):
 
 
 def _kcore_ctes(k: int, rounds: int) -> str:
-    """The bounded-peeling chain (assumes the triangle ``pe`` CTE is
-    in scope; ends in ``kfin``: surviving (node, degree) rows). CTE
-    names (ke*/kd*/kfin) are disjoint from the triangle
-    (pe/tn/tri/pern/tfin), LPA (nodes/l*/c*) and BFS (d*/r*) chains
-    by inspection — the graph_suite merge-safety contract."""
+    """The bounded-peeling chain: exactly ``rounds`` synchronous peels
+    unrolled into chained CTE pairs (degree count, then the
+    both-endpoints-kept edge filter). Assumes the triangle ``pe`` CTE
+    is in scope; ends in ``kfin``: surviving (node, degree) rows."""
     parts = ["ke0 AS (SELECT u, v FROM pe)"]
     for i in range(1, rounds + 1):
         parts.append(
@@ -807,55 +728,11 @@ def _kcore_ctes(k: int, rounds: int) -> str:
     return ",\n    ".join(parts)
 
 
-def kcore_oracle_sql(k: int = 5, rounds: int = 4) -> str:
-    """DuckDB twin of ``operators/graph.py:k_core`` on the
-    parts-co-ordered graph (the triangle fixture, via the SHARED
-    ``pe`` CTE): exactly ``rounds`` synchronous peels unrolled into
-    chained CTE pairs (degree count, then the both-endpoints-kept
-    edge filter) — the integer-loop replay recipe. k=5/rounds=4 on
-    this fixture cascades for three rounds and is stable by the
-    fourth (measured at sf0.01), so the row exercises BOTH the
-    multi-round cascade and the idempotent-once-stable contract."""
-    if rounds < 0:
-        raise ValueError("kcore_oracle_sql needs rounds >= 0")
-    return f"""
-    WITH {triangle_edges_sql().strip().rstrip()},
-    {_kcore_ctes(k, rounds)}
-    SELECT node, degree FROM kfin
-    """
-
-
-def kcore_spark(spark, sf_dir, cooccur_und=None):
-    """The Spark side the registry row uses verbatim — the SHARED
-    parts-co-ordered edge list through operators/graph.py:k_core.
-    ``cooccur_und``: same r19 sharing contract as
-    :func:`triangle_spark`."""
-    from data_frame_spark.operators.graph import k_core
-
-    if cooccur_und is not None:
-        return k_core(cooccur_und, k=5, rounds=4, src_col="u", dst_col="v",
-                      prepared=True)
-    return k_core(_part_cooccur_pairs(spark, sf_dir), k=5, rounds=4)
-
-
-def lpa_oracle_sql(iterations: int = 4) -> str:
-    """DuckDB twin of ``operators/graph.py:label_propagation`` on the
-    bidirectional part<->supplier graph (the pagerank fixture): the
-    synchronous min-tie-break rounds unrolled into chained CTE pairs
-    — count (node, label) in-neighbor votes, then the deterministic
-    (count DESC, label ASC) argmax via ROW_NUMBER (the single-node
-    equivalent of the Spark side's map-combinable MAX(struct))."""
-    if iterations < 1:
-        raise ValueError("lpa_oracle_sql needs >= 1 iteration")
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()] + _lpa_ctes(iterations)
-    )
-    return f"{body}\n    SELECT node, label FROM l{iterations}"
-
-
 def _lpa_ctes(iterations: int) -> list[str]:
     """The LPA round chain (assumes the pagerank ``e`` CTE is in
-    scope) — shared by lpa_oracle_sql and the graph_suite family."""
+    scope): the synchronous min-tie-break rounds unrolled into chained
+    CTE pairs — count (node, label) in-neighbor votes, then the
+    deterministic (count DESC, label ASC) argmax via ROW_NUMBER."""
     parts = [
         """nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM e
                UNION SELECT DISTINCT dst FROM e),
@@ -880,10 +757,8 @@ def _lpa_ctes(iterations: int) -> list[str]:
 
 
 def _part_supplier_edges(spark, sf_dir):
-    """The bidirectional part<->supplier fixture edges — ONE
-    definition shared by the LPA/BFS twins and the graph_suite family
-    (identical construction to pagerank_part_supplier; round-13
-    review: three inline copies had crept in)."""
+    """The bidirectional part<->supplier fixture edges (identical
+    construction to pagerank_part_supplier)."""
     from pyspark.sql import functions as F
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -895,7 +770,7 @@ def _part_supplier_edges(spark, sf_dir):
 
 
 def _part_seeds(spark, sf_dir):
-    """The every-100th-part BFS seed set (mirrors bfs_oracle_sql's
+    """The every-100th-part BFS seed set (mirrors ``_bfs_ctes``'
     d0)."""
     from pyspark.sql import functions as F
 
@@ -907,12 +782,127 @@ def _part_seeds(spark, sf_dir):
     )
 
 
-def lpa_spark(spark, sf_dir):
-    """The Spark side the future registry row will use verbatim —
-    identical edge construction to pagerank_part_supplier."""
-    from data_frame_spark.operators.graph import label_propagation
+def _bfs_ctes(max_hops: int) -> list[str]:
+    """The BFS relaxation chain (assumes the pagerank ``e`` CTE is in
+    scope), seeds = parts with partkey % 100 = 0: the min-plus
+    relaxation unrolled into chained CTE pairs (propagate one hop
+    with a MIN groupBy, then min-merge with the running table)."""
+    parts = [
+        """d0 AS MATERIALIZED (
+      SELECT DISTINCT CAST(l_partkey AS BIGINT) AS node,
+             CAST(0 AS BIGINT) AS hops
+      FROM lineitem WHERE l_partkey % 100 = 0)""",
+    ]
+    for k in range(1, max_hops + 1):
+        parts.append(
+            f"""r{k} AS (SELECT e.dst AS node, MIN(d.hops + 1) AS hops
+            FROM e JOIN d{k - 1} d ON d.node = e.src
+            GROUP BY e.dst),
+    d{k} AS MATERIALIZED (
+      SELECT node, CAST(MIN(hops) AS BIGINT) AS hops
+      FROM (SELECT node, hops FROM d{k - 1}
+            UNION ALL SELECT node, hops FROM r{k})
+      GROUP BY node)"""
+        )
+    return parts
 
-    return label_propagation(_part_supplier_edges(spark, sf_dir), iterations=4)
+
+def graph_suite_v2_oracle_sql(
+    iterations: int = 3, max_hops: int = 3, k: int = 5, rounds: int = 4
+) -> str:
+    """DuckDB twin of :func:`graph_suite_v2_spark`: the four facet
+    chains over the two fixture graphs. The part<->supplier ``e`` CTE
+    and the parts-co-ordered ``pe`` CTE (via _tri_ctes) each appear
+    ONCE; ``pe`` feeds both the triangle and the peeling chains. The
+    CTE names of the four chains are disjoint."""
+    body = ",\n    ".join(
+        ["WITH " + pagerank_edges_sql().strip().rstrip()]
+        + _lpa_ctes(iterations)
+        + _bfs_ctes(max_hops)
+        + [_tri_ctes()]
+        + [_kcore_ctes(k, rounds)]
+    )
+    return f"""{body}
+    SELECT 'triangles' AS facet, node, triangles AS value FROM tfin
+    UNION ALL
+    SELECT 'lpa_label', node, label FROM l{iterations}
+    UNION ALL
+    SELECT 'bfs_hops', node, hops FROM d{max_hops}
+    UNION ALL
+    SELECT 'kcore_degree', node, degree FROM kfin
+    """
+
+
+def graph_suite_v2_spark(spark, sf_dir):
+    """Spark side of the registered graph_suite_family row: four
+    facets built through :func:`run_facets`, all sharing the
+    (node, BIGINT value) shape.
+
+    - 'triangles' and 'kcore_degree' (k=5, rounds=4) run on ONE
+      canonicalized parts-co-ordered relation (:func:`_part_cooccur_und`).
+    - 'lpa_label' and 'bfs_hops' run on the part<->supplier edge list,
+      materialized once by an eager checkpoint inside whichever of the
+      two facets asks first, so the triangle and k-core facets do not
+      wait for it. They take it with prepared=True (distinct by
+      construction, so per-facet re-canonicalization would be waste).
+      Three rounds/hops: per-round latency is job-barrier-bound on the
+      tiny vertex tables, and three rounds already demonstrate
+      multi-hop propagation.
+
+    Each facet's result is integer-exact under any partitioning or
+    ordering, so the build schedule cannot affect the output."""
+    import threading
+
+    from pyspark.sql import functions as F
+
+    from data_frame_spark.operators.graph import (
+        hop_distances,
+        k_core,
+        label_propagation,
+        triangle_count,
+    )
+
+    und = _part_cooccur_und(spark, sf_dir)
+    seeds = _part_seeds(spark, sf_dir)
+    edges_lock, edges_done = threading.Lock(), []
+
+    def edges():
+        with edges_lock:
+            if not edges_done:
+                edges_done.append(
+                    _part_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
+                )
+        return edges_done[0]
+
+    def facet(name, df, value):
+        return df.select(
+            F.lit(name).alias("facet"), "node", F.col(value).alias("value")
+        )
+
+    tri, lpa, bfs, kc = run_facets(
+        spark,
+        {
+            "triangles": lambda: facet(
+                "triangles", triangle_count(und, "u", "v", prepared=True),
+                "triangles",
+            ),
+            "lpa_label": lambda: facet(
+                "lpa_label",
+                label_propagation(edges(), iterations=3, prepared=True), "label",
+            ),
+            "bfs_hops": lambda: facet(
+                "bfs_hops",
+                hop_distances(edges(), seeds, max_hops=3, prepared=True), "hops",
+            ),
+            "kcore_degree": lambda: facet(
+                "kcore_degree",
+                k_core(und, k=5, rounds=4, src_col="u", dst_col="v",
+                       prepared=True),
+                "degree",
+            ),
+        },
+    )
+    return tri.unionByName(lpa).unionByName(bfs).unionByName(kc)
 
 
 def _prep_tmp_dir(name: str, sf_dir: str, clean: bool = False) -> str:
@@ -1086,137 +1076,6 @@ def format_roundtrip_family_spark(spark, sf_dir):
         "doc_id", "lang", "source", "n_chars", "text_md5",
     )
     return o.unionByName(j)
-
-
-def bfs_oracle_sql(max_hops: int = 4) -> str:
-    """DuckDB twin of ``operators/graph.py:hop_distances`` on the
-    bidirectional part<->supplier graph, seeds = parts with
-    partkey % 100 = 0: the min-plus relaxation unrolled into chained
-    CTE pairs (propagate one hop with a MIN groupBy, then min-merge
-    with the running table) — the integer-loop replay recipe."""
-    if max_hops < 0:
-        raise ValueError("bfs_oracle_sql needs max_hops >= 0")
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()] + _bfs_ctes(max_hops)
-    )
-    return f"{body}\n    SELECT node, hops FROM d{max_hops}"
-
-
-def _bfs_ctes(max_hops: int) -> list[str]:
-    """The BFS relaxation chain (assumes the pagerank ``e`` CTE is in
-    scope) — shared by bfs_oracle_sql and the graph_suite family."""
-    parts = [
-        """d0 AS MATERIALIZED (
-      SELECT DISTINCT CAST(l_partkey AS BIGINT) AS node,
-             CAST(0 AS BIGINT) AS hops
-      FROM lineitem WHERE l_partkey % 100 = 0)""",
-    ]
-    for k in range(1, max_hops + 1):
-        parts.append(
-            f"""r{k} AS (SELECT e.dst AS node, MIN(d.hops + 1) AS hops
-            FROM e JOIN d{k - 1} d ON d.node = e.src
-            GROUP BY e.dst),
-    d{k} AS MATERIALIZED (
-      SELECT node, CAST(MIN(hops) AS BIGINT) AS hops
-      FROM (SELECT node, hops FROM d{k - 1}
-            UNION ALL SELECT node, hops FROM r{k})
-      GROUP BY node)"""
-        )
-    return parts
-
-
-def bfs_spark(spark, sf_dir):
-    """The Spark side the future registry row will use verbatim —
-    same edge construction as pagerank_part_supplier; seeds are the
-    every-100th parts."""
-    from data_frame_spark.operators.graph import hop_distances
-
-    return hop_distances(
-        _part_supplier_edges(spark, sf_dir), _part_seeds(spark, sf_dir), max_hops=4
-    )
-
-
-def graph_suite_family_oracle_sql(iterations: int = 3, max_hops: int = 3) -> str:
-    """Facet union of the three prepped graph twins on their shared
-    (node, value) shape — the r14 single-slot registration candidate:
-    'triangles' (parts-co-ordered graph), 'lpa_label' and 'bfs_hops'
-    (both on the pagerank part<->supplier edges, whose CTEs appear
-    ONCE). The triangle chain is the SHARED _tri_ctes() — the
-    standalone twin and this family can never pin different graphs;
-    its CTE names (pe/tn/tri/pern/tfin) are disjoint from the
-    LPA (nodes/l*/c*) and BFS (d*/r*) chains."""
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()]
-        + _lpa_ctes(iterations)
-        + _bfs_ctes(max_hops)
-        + [_tri_ctes()]
-    )
-    return f"""{body}
-    SELECT 'triangles' AS facet, node, triangles AS value FROM tfin
-    UNION ALL
-    SELECT 'lpa_label', node, label FROM l{iterations}
-    UNION ALL
-    SELECT 'bfs_hops', node, hops FROM d{max_hops}
-    """
-
-
-def graph_suite_family_spark(spark, sf_dir, cooccur_und=None):
-    """Spark side of the r14 graph_suite_family candidate: the
-    part<->supplier edge list is MATERIALIZED once (eager checkpoint
-    here; the LPA/BFS facets take it with prepared=True — distinct by
-    construction, so per-facet re-canonicalization would be waste);
-    the triangle facet runs on its own parts-co-ordered graph. All
-    three outputs share (node, BIGINT value).
-
-    The three facets are INDEPENDENT subtrees built from three driver
-    threads. The original r14 rationale (overlapping eager per-round
-    checkpoint JOBS) is gone since r18 — LPA/BFS rounds now chain
-    into the single materializing action and construction is mostly
-    plan-side — but the threads still overlap the remaining
-    construction-time jobs (the eager edge checkpoint, the lazy-
-    checkpoint materializations inside the triangle facet) and cost
-    nothing when there is nothing to overlap. Determinism is
-    untouched: each facet's result is integer-exact under any
-    partitioning/ordering, and the threads build disjoint DataFrames
-    (r14 measurement: ~11 s sequential -> ~7 s overlapped; r18: the
-    family is LPA-facet-bound, threading neutral)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
-
-    from data_frame_spark.operators.graph import hop_distances, label_propagation
-
-    edges = _part_supplier_edges(spark, sf_dir).localCheckpoint(eager=True)
-    seeds = _part_seeds(spark, sf_dir)
-
-    # 3 rounds/hops (vs the standalone twins' 4): per-round latency is
-    # job-barrier-bound on the tiny vertex tables, and three rounds
-    # already demonstrate multi-hop propagation — a ~20% row-cost trim
-    # measured at sf0.1
-    def tri_facet():
-        return triangle_spark(spark, sf_dir, cooccur_und=cooccur_und).select(
-            F.lit("triangles").alias("facet"), "node",
-            F.col("triangles").alias("value"),
-        )
-
-    def lpa_facet():
-        return label_propagation(edges, iterations=3, prepared=True).select(
-            F.lit("lpa_label").alias("facet"), "node",
-            F.col("label").alias("value"),
-        )
-
-    def bfs_facet():
-        return hop_distances(edges, seeds, max_hops=3, prepared=True).select(
-            F.lit("bfs_hops").alias("facet"), "node",
-            F.col("hops").alias("value"),
-        )
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        tri, lpa, bfs = (
-            f.result()
-            for f in [pool.submit(fn) for fn in (tri_facet, lpa_facet, bfs_facet)]
-        )
-    return tri.unionByName(lpa).unionByName(bfs)
 
 
 GAPFILL_BUCKET_US = 86400 * 1000000  # daily buckets
@@ -1614,32 +1473,23 @@ def decontamination_leg(spark, sf_dir, leg: str):
 
 def decontamination_family_spark(spark, sf_dir):
     """Spark side of the registered decontamination_family row: the
-    three standalone pipelines (bloom gate, benchmark n-gram
-    collision join, cross-split audit), facet-unioned with
-    typed-NULL superset columns padded by the SAME owner sets the
-    oracle projects from.
+    three legs (bloom gate, benchmark n-gram collision join,
+    cross-split audit), facet-unioned with typed-NULL superset columns
+    padded by the SAME owner sets the oracle projects from.
 
-    Optimization (round 18, guide §2.3/§2.4 — fewer passes, fewer
-    shuffles): the bloom and ngram legs both consume the corpus's
-    DISTINCT (doc_id, md5(13-gram)) relation, and their benchmark
-    side (every 50th doc) is a pure FILTER of that same relation —
-    so the doc-keyed shingle window + md5 + distinct pipeline is
-    built ONCE, lazily localCheckpoint-ed (materialized by the first
-    leg's first job, reused by every other reference), and passed
-    into both legs via their ``corpus_grams``/``bench_grams``
-    parameters. Before: the family's plan scanned documents and ran
-    the 13-gram pipeline 4× (corpus twice, bench twice). After: once.
-    Results are identical (the legs' own gram construction is the
-    same distinct relation); the standalone ``decontamination_leg``
-    builders — and their per-leg broadcast-contract plan pins — are
-    untouched. The audit leg (5-grams over the split-assigned corpus)
-    shares nothing at n=13 and stays as-is; since r19 it BUILDS on a
-    second driver thread (guide §2.6) so its plan construction
-    overlaps the g13 checkpoint's synchronous stage materialization
-    instead of waiting behind it — disjoint subtrees, identical
-    output."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    The bloom and ngram legs both consume the corpus's DISTINCT
+    (doc_id, md5(13-gram)) relation, and their benchmark side (every
+    50th doc) is a pure FILTER of that same relation — so the
+    doc-keyed shingle window + md5 + distinct pipeline is built ONCE,
+    lazily localCheckpoint-ed (materialized by the first leg's first
+    job, reused by every other reference), and passed into both legs
+    via their ``corpus_grams``/``bench_grams`` parameters. Results are
+    identical to :func:`decontamination_leg`'s per-leg builds (the
+    legs' own gram construction is the same distinct relation).
+    The audit leg (5-grams over the split-assigned corpus) shares
+    nothing at n=13; it builds as a second :func:`run_facets` facet,
+    so its plan construction overlaps the g13 checkpoint's stage
+    materialization — disjoint subtrees, identical output."""
     from pyspark.sql import functions as F
 
     from data_frame_spark.operators.dedup import (
@@ -1650,10 +1500,7 @@ def decontamination_family_spark(spark, sf_dir):
     from data_frame_spark.operators.distributed import ensure_parallelism
     from data_frame_spark.queries import t
 
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        audit_future = pool.submit(decontamination_leg, spark, sf_dir, "audit")
-
+    def bloom_and_ngram():
         docs = ensure_parallelism(t(spark, sf_dir, "documents"))
         # the ONE shared-builder definition (never an inline rebuild —
         # the legs' contract is "exactly what _hashed_ngrams would build")
@@ -1662,19 +1509,25 @@ def decontamination_family_spark(spark, sf_dir):
         )
         bench_g = g13.where(F.col("doc_id") % 50 == 0)
         bench = docs.where(F.col("doc_id") % 50 == 0)
-        legs = {
-            "bloom": bloom_contamination(
+        return (
+            bloom_contamination(
                 docs, bench, "text", "doc_id", n=13, m_bits=_DECON_BLOOM_M,
                 corpus_grams=g13, bench_grams=bench_g,
             ),
-            "ngram": ngram_contamination(
+            ngram_contamination(
                 docs, bench, "text", "doc_id", n=13,
                 corpus_grams=g13, bench_grams=bench_g,
             ),
-            "audit": audit_future.result(),
-        }
-    finally:
-        pool.shutdown()
+        )
+
+    audit, (bloom, ngram) = run_facets(
+        spark,
+        {
+            "audit": lambda: decontamination_leg(spark, sf_dir, "audit"),
+            "bloom_ngram": bloom_and_ngram,
+        },
+    )
+    legs = {"bloom": bloom, "ngram": ngram, "audit": audit}
 
     def pad(leg: str):
         return legs[leg].select(
@@ -1918,144 +1771,6 @@ def pivot_melt_spark(spark, sf_dir):
     )
 
 
-#: the dq_verify_orders candidate's rule set — EXPLICIT bounded rule
-#: list (code, never data): three rules that FIRE on the fixture
-#: (range, accepted domain, and the uniqueness rule on the repeating
-#: o_custkey — the latter exercising the surplus arithmetic
-#: non-vacuously) and three that pass (completeness, o_orderkey
-#: uniqueness, FK integrity).
-DQ_RULES = [
-    ("not_null", "custkey_not_null", "o_custkey"),
-    ("unique", "orderkey_unique", ["o_orderkey"]),
-    ("unique", "custkey_unique", ["o_custkey"]),
-    ("in_range", "totalprice_range", "o_totalprice", 0.0, 250000.0),
-    ("accepted_values", "status_domain", "o_orderstatus", ["O", "F"]),
-]
-
-
-def dq_oracle_sql() -> str:
-    """DuckDB twin of the dq_verify_orders candidate
-    (operators/dq.py:verify over orders + the customer FK): each rule
-    is the straightforward aggregate replay — row-local rules one
-    shared scan, uniqueness COUNT(*) − COUNT(DISTINCT-tuple) via a
-    null-safe DISTINCT subquery, FK a LEFT-join miss count over
-    non-NULL keys. CTE names (dq*) disjoint from every other chain."""
-    return """
-    WITH dqb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                        CAST(SUM(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v_nn,
-                        CAST(SUM(CASE WHEN o_totalprice IS NOT NULL
-                                       AND (o_totalprice < 0.0 OR o_totalprice > 250000.0)
-                                      THEN 1 ELSE 0 END) AS BIGINT) AS v_rng,
-                        CAST(SUM(CASE WHEN o_orderstatus IS NOT NULL
-                                       AND o_orderstatus NOT IN ('O', 'F')
-                                      THEN 1 ELSE 0 END) AS BIGINT) AS v_dom
-                 FROM orders),
-    dqu1 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                    CAST(COUNT(*) - (SELECT COUNT(*) FROM
-                          (SELECT DISTINCT o_orderkey FROM orders)) AS BIGINT) AS v
-             FROM orders),
-    dqu2 AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                    CAST(COUNT(*) - (SELECT COUNT(*) FROM
-                          (SELECT DISTINCT o_custkey FROM orders)) AS BIGINT) AS v
-             FROM orders),
-    dqf AS (SELECT CAST(COUNT(*) AS BIGINT) AS n,
-                   CAST(SUM(CASE WHEN c.c_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v
-            FROM (SELECT o_custkey FROM orders WHERE o_custkey IS NOT NULL) o
-            LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
-              ON o.o_custkey = c.c_custkey)
-    SELECT 'custkey_not_null' AS rule_id, 'not_null' AS rule,
-           'o_custkey' AS "column", n AS n_rows, v_nn AS n_violations,
-           v_nn = 0 AS passed
-    FROM dqb
-    UNION ALL
-    SELECT 'totalprice_range', 'in_range', 'o_totalprice', n, v_rng,
-           v_rng = 0 FROM dqb
-    UNION ALL
-    SELECT 'status_domain', 'accepted_values', 'o_orderstatus', n,
-           v_dom, v_dom = 0 FROM dqb
-    UNION ALL
-    SELECT 'orderkey_unique', 'unique', 'o_orderkey', n, v, v = 0 FROM dqu1
-    UNION ALL
-    SELECT 'custkey_unique', 'unique', 'o_custkey', n, v, v = 0 FROM dqu2
-    UNION ALL
-    SELECT 'custkey_fk', 'ref_integrity', 'o_custkey', n, v, v = 0 FROM dqf
-    """
-
-
-def dq_verify_spark(spark, sf_dir):
-    """The Spark side the future dq_verify_orders row would use
-    verbatim — the DQ_RULES set over orders plus the customer FK
-    integrity rule."""
-    from data_frame_spark.operators import dq
-    from data_frame_spark.queries import t
-
-    orders = t(spark, sf_dir, "orders")
-    customer = t(spark, sf_dir, "customer")
-    rules = list(DQ_RULES) + [
-        ("ref_integrity", "custkey_fk", "o_custkey", customer, "c_custkey"),
-    ]
-    return dq.verify(orders, rules)
-
-
-def _lookup_family_leg_sqls() -> dict[str, str]:
-    """The two standalone lookup oracles, lazy-imported while the
-    rows exist (the drift-free contract)."""
-    from data_frame_spark.queries import ORACLE
-
-    return {
-        "asof": ORACLE["asof_multi_value_lookup"],
-        "interpolated": ORACLE["interpolated_lookup_value"],
-    }
-
-
-def lookup_family_oracle_sql() -> str:
-    """Facet union of the as-of and interpolated lookup rows — the
-    r19 funding-merge candidate pre-specced at r17 close (net −1
-    WITHIN r19's due set: both parents are r17-checked, so the merge
-    frees exactly the slot dq_verify_orders needs; neither is in the
-    bench HEADLINE). `user_id` is the SHARED column; the as-of leg's
-    event ids / view values are NULL on the interpolated leg and the
-    probe/interpolated columns NULL on the as-of leg. CTE names
-    (lk*) disjoint from every other chain."""
-    legs = _lookup_family_leg_sqls()
-    return f"""
-    WITH lk_a AS (SELECT * FROM ({legs["asof"]})),
-    lk_i AS (SELECT * FROM ({legs["interpolated"]}))
-    SELECT 'asof' AS facet, user_id, event_id, view_event_id,
-           view_value, CAST(NULL AS DOUBLE) AS probe_k,
-           CAST(NULL AS DOUBLE) AS value
-    FROM lk_a
-    UNION ALL
-    SELECT 'interpolated', user_id, CAST(NULL AS BIGINT),
-           CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE), probe_k, value
-    FROM lk_i
-    """
-
-
-def lookup_family_spark(spark, sf_dir):
-    """Spark side of the r19 candidate: the registered pipelines
-    reused pre-registration (the binary_features stance — at
-    registration the bodies move into a per-leg helper)."""
-    from pyspark.sql import functions as F
-
-    from data_frame_spark.queries import QUERIES
-
-    asof = QUERIES["asof_multi_value_lookup"](spark, sf_dir).select(
-        F.lit("asof").alias("facet"), "user_id", "event_id",
-        "view_event_id", "view_value",
-        F.lit(None).cast("double").alias("probe_k"),
-        F.lit(None).cast("double").alias("value"),
-    )
-    interp = QUERIES["interpolated_lookup_value"](spark, sf_dir).select(
-        F.lit("interpolated").alias("facet"), "user_id",
-        F.lit(None).cast("long").alias("event_id"),
-        F.lit(None).cast("long").alias("view_event_id"),
-        F.lit(None).cast("double").alias("view_value"),
-        "probe_k", "value",
-    )
-    return asof.unionByName(interp)
-
-
 #: Literal snapshot (the binary_features/decontamination registration
 #: motion) of the facet union of the two standalone fit oracles,
 #: printed from the lazy composition while the rows (fits_family v1 /
@@ -2132,26 +1847,19 @@ def fits_family_v2_oracle_sql() -> str:
 
 
 def fits_family_v2_spark(spark, sf_dir):
-    """Spark side of the r18 candidate — the SHARED-MOMENT form (the
-    meanmax shared-ladder precedent): ONE 13-moment scale-4 quantized
-    lineitem aggregate feeds BOTH the seven fit rows and the residual
-    leg's linear/poly2 coefficients (fit_residuals' own moment set is
-    a bit-identical subset — same dsum expressions, same scale), then
-    the events exp aggregate and ONE residual aggregate. 3 scans vs
-    the naive composition's 4. A/B'd same-session at r17 close
-    (min-of-3, sf0.1, outputs asserted bit-identical): shared 3.21 s
-    vs composition 3.95 s — the winner is locked in here so the
-    parity test exercises the FINAL r18 registration form every suite
-    run (docs/PLANS.md §"Round-18 slot funding").
+    """Spark side of the registered fits_family row — the
+    SHARED-MOMENT form: ONE 13-moment scale-4 quantized lineitem
+    aggregate feeds BOTH the seven fit rows and the residual leg's
+    linear/poly2 coefficients (the residual fit's own moment set is a
+    bit-identical subset — same dsum expressions, same scale), then
+    the events exp aggregate and ONE residual aggregate: 3 scans
+    instead of 4.
 
-    r19 (guide §2.6): the EVENTS exp-fit collect is independent of
-    the lineitem moment chain (the residual aggregate depends on the
-    moments, so it stays sequential after them), and the two
-    driver-side aggregates serialized; a second driver thread runs
-    the exp fit concurrently. Both are exact quantized aggregates —
-    scheduling cannot affect any value."""
+    The events exp-fit collect is independent of the lineitem moment
+    collect, so the two run as :func:`run_facets` facets; the residual
+    aggregate depends on the moments and runs after them. Both are
+    exact quantized aggregates — scheduling cannot affect any value."""
     import math
-    from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import functions as F
 
@@ -2184,9 +1892,6 @@ def fits_family_v2_spark(spark, sf_dir):
         "slxly": dsum(F.log(X) * F.log(Y), 4),
         "slny": dsum(F.log(Y), 4),
     }
-    # the events exp fit shares nothing with the lineitem moments —
-    # run its collect on a second driver thread while this one does
-    # the moment + residual chain
     def exp_fit():
         ev = t(spark, sf_dir, "events").select(
             (F.col("ts_us") / F.lit(1000000.0) / F.lit(86400.0)).alias("x"),
@@ -2194,14 +1899,10 @@ def fits_family_v2_spark(spark, sf_dir):
         )
         return OpFit.least_squares_fit(ev, "x", "y", mode="exp")
 
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        efit_future = pool.submit(exp_fit)
+    def moments():
+        return d.agg(*[e.alias(k) for k, e in sparkexpr.items()]).collect()[0].asDict()
 
-        m = d.agg(*[e.alias(k) for k, e in sparkexpr.items()]).collect()[0].asDict()
-        efit = efit_future.result()
-    finally:
-        pool.shutdown()
+    efit, m = run_facets(spark, {"exp": exp_fit, "moments": moments})
     mv = [m["n"]] + [m[f"sx{k}"] for k in range(1, 7)]
     rhs = [m["sy"], m["sxy1"], m["sxy2"], m["sxy3"]]
     lin = [num / den for num, den in _cramer(mv[:3], rhs[:2], 1)]
@@ -2267,68 +1968,6 @@ def fits_family_v2_spark(spark, sf_dir):
         "sse", "n_points",
     )
     return fits_p.unionByName(res_p)
-
-
-def graph_suite_v2_oracle_sql(
-    iterations: int = 3, max_hops: int = 3, k: int = 5, rounds: int = 4
-) -> str:
-    """r16 slot-funding candidate (pre-proven r15): graph_suite_family
-    plus the kcore row as a fourth 'kcore_degree' facet — the merge
-    the name-disjoint CTE chains (pe/tn/tri/pern/tfin vs ke*/kd*/kfin
-    vs nodes/l*/c* vs d*/r*) were written for in r14. The ``pe``
-    parts-co-ordered edge CTE appears ONCE (via _tri_ctes) and feeds
-    both the triangle and the peeling chains; kcore keeps the
-    registered row's k=5/rounds=4 contract while LPA/BFS keep the
-    family's 3-round trim."""
-    body = ",\n    ".join(
-        ["WITH " + pagerank_edges_sql().strip().rstrip()]
-        + _lpa_ctes(iterations)
-        + _bfs_ctes(max_hops)
-        + [_tri_ctes()]
-        + [_kcore_ctes(k, rounds)]
-    )
-    return f"""{body}
-    SELECT 'triangles' AS facet, node, triangles AS value FROM tfin
-    UNION ALL
-    SELECT 'lpa_label', node, label FROM l{iterations}
-    UNION ALL
-    SELECT 'bfs_hops', node, hops FROM d{max_hops}
-    UNION ALL
-    SELECT 'kcore_degree', node, degree FROM kfin
-    """
-
-
-def graph_suite_v2_spark(spark, sf_dir):
-    """Spark side of the r16 graph_suite v2 candidate: the r14 family
-    (three concurrent facets, shared materialized part<->supplier
-    edges, parts-co-ordered triangle graph) plus k-core as a FOURTH
-    concurrent facet on the SAME _part_cooccur_pairs fixture
-    (k=5/rounds=4 — the registered kcore row's exact contract, so
-    the merge only re-labels proven work)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import functions as F
-
-    # ONE canonicalized co-occurrence relation for the triangle and
-    # k-core facets (r19, guide §2.3): before, each facet re-ran the
-    # lineitem scan + orderkey self-join + distinct internally
-    und = _part_cooccur_und(spark, sf_dir)
-
-    def suite_facets():
-        return graph_suite_family_spark(spark, sf_dir, cooccur_und=und)
-
-    def kcore_facet():
-        return kcore_spark(spark, sf_dir, cooccur_und=und).select(
-            F.lit("kcore_degree").alias("facet"), "node",
-            F.col("degree").alias("value"),
-        )
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        suite, kc = (
-            f.result()
-            for f in [pool.submit(fn) for fn in (suite_facets, kcore_facet)]
-        )
-    return suite.unionByName(kc)
 
 
 # ---------------------------------------------------------------------------
@@ -3257,5 +2896,3 @@ def ppr_spark(spark, sf_dir):
         iterations=4,
         seeds=_part_seeds(spark, sf_dir),
     )
-
-

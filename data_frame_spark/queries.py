@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from data_frame_spark.exact import dsum, davg, sql_dsum, sql_davg
 from data_frame_spark.frame import Frame
+from data_frame_spark.session import run_facets
 from data_frame_spark.operators import core as OpCore
 from data_frame_spark.sources import csv as CSVSrc
 from data_frame_spark.operators import lookup as OpLookup
@@ -431,24 +432,19 @@ def weighted_stats_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quantiles_price_and_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """df-quantile, both variants in one oracle row (round-9 merge of
-    quantiles_extendedprice + weighted_quantiles_value; the operators
-    are unchanged): the unweighted empirical inverse CDF over
-    lineitem prices (statistics.rkt:84-118, default 0/.25/.5/.75/1
-    fractions) next to the weighted variant over event values, with
-    weights = deltas of cumulative elapsed time (first row keeps its
-    raw weight). Both run the range-bucketed distributed-exact
-    quantile primitives — no global sort or partitionless window.
+    """df-quantile, both variants in one oracle row: the unweighted
+    empirical inverse CDF over lineitem prices
+    (statistics.rkt:84-118, default 0/.25/.5/.75/1 fractions) next to
+    the weighted variant over event values, with weights = deltas of
+    cumulative elapsed time (first row keeps its raw weight). Both
+    run the range-bucketed distributed-exact quantile primitives — no
+    global sort or partitionless window.
 
-    The two facet BUILDERS run from two driver threads (r19, guide
-    §2.6 — the meanmax/graph-suite family pattern): each performs
+    The two facets build through :func:`run_facets`: each performs
     its own driver-side jobs (boundary-sketch collects, the weighted
-    facet's lag-pipeline checkpoint), over DIFFERENT tables, and
-    serializing them left the cluster idle during each other's
-    driver round-trips. The facets are independent subtrees with
-    integer-exact results, so construction order cannot affect the
-    output."""
-    from concurrent.futures import ThreadPoolExecutor
+    facet's lag-pipeline checkpoint) over different tables. The
+    facets are independent subtrees with integer-exact results, so
+    construction order cannot affect the output."""
 
     def uq_facet():
         li = t(spark, sf_dir, "lineitem")
@@ -462,10 +458,7 @@ def quantiles_price_and_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev, "value", "w", order_by=["ts_ns", "event_id"]
         )
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        uq, wq = (
-            f.result() for f in [pool.submit(fn) for fn in (uq_facet, wq_facet)]
-        )
+    uq, wq = run_facets(spark, {"unweighted": uq_facet, "weighted": wq_facet})
     return uq.withColumn("weighted", F.lit(False)).unionByName(
         wq.withColumn("weighted", F.lit(True))
     )
@@ -558,10 +551,7 @@ _TRUNC_Q5 = """CASE WHEN l_quantity/5.0 < 0
     """,
 )
 def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole df-histogram surface in one oracle row (round-9 merge
-    of histogram_quantity + weighted_histogram_value +
-    string_histogram_event_type + combine_histograms_returnflag; the
-    operators are unchanged).
+    """The whole df-histogram surface in one oracle row.
 
     Facets: 'numeric' = gap-filled counts (histogram.rkt:37-204) +
     normalize-histogram shares (histogram.rkt:302-311) +
@@ -576,27 +566,20 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     Numeric buckets ride as strings so all four facets share one
     schema; BIGINT counts ride as doubles (exact below 2^53).
 
-    The four facet BUILDERS run from driver threads (r19, guide
-    §2.6 — the quantiles/meanmax pattern): the numeric and combined
-    facets each synchronously materialize a lazy checkpoint (the
-    gap-filled bucket table / the flag-keyed counts) and the
-    weighted facet performs its boundary-collect driver jobs, over
-    disjoint relations — serializing them left the cluster idle
-    during each other's driver round-trips. The facets are
-    independent subtrees with exact integer counts, so construction
-    order cannot affect the output."""
-    from concurrent.futures import ThreadPoolExecutor
-
+    The four facets build through :func:`run_facets`: the numeric
+    and combined facets each materialize a lazy checkpoint (the
+    gap-filled bucket table / the flag-keyed counts) and the weighted
+    facet performs its boundary-collect driver jobs, over disjoint
+    relations. The facets are independent subtrees with exact integer
+    counts, so construction order cannot affect the output."""
     _dnull = F.lit(None).cast("double")
     li = t(spark, sf_dir, "lineitem")
     # ONE lineitem bucket aggregate feeds the plain, normalized and
-    # trimmed-percentage views (r18, guide §2.3/§2.4: the three views
-    # each re-ran the scan+aggregate+gap-fill pipeline — and gap-fill
-    # references its input twice, so the plan held SIX lineitem
-    # scans for this facet alone). The lazy checkpoint materializes
-    # the gap-filled table once; histogram_from_counts re-derives the
-    # percentage/trim view from the identical counts (gap-fill is
-    # idempotent), so all values are unchanged.
+    # trimmed-percentage views (gap-fill references its input twice,
+    # so three separate views would plan six lineitem scans). The lazy
+    # checkpoint materializes the gap-filled table once;
+    # histogram_from_counts re-derives the percentage/trim view from
+    # the identical counts (gap-fill is idempotent).
     def numeric_facet():
         h = OpHist.histogram(li, "l_quantity", width=5.0).localCheckpoint(
             eager=False
@@ -684,16 +667,15 @@ def histogram_family(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("boolean").alias("in_trim"),
         )
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        numeric, weighted, strings, combined = (
-            f.result()
-            for f in [
-                pool.submit(fn)
-                for fn in (
-                    numeric_facet, weighted_facet, strings_facet, combined_facet
-                )
-            ]
-        )
+    numeric, weighted, strings, combined = run_facets(
+        spark,
+        {
+            "numeric": numeric_facet,
+            "weighted": weighted_facet,
+            "string": strings_facet,
+            "combined": combined_facet,
+        },
+    )
     return (
         numeric.unionByName(weighted).unionByName(strings).unionByName(combined)
     )
@@ -4916,9 +4898,8 @@ def bpe_family(spark: SparkSession, sf_dir: str) -> DataFrame:
       stream; token-free documents emit (0, md5('')).
 
     The oracle replays the identical merge loop in DuckDB with the
-    word column carried through (MATERIALIZED CTE chain — the
-    bpe_oracle_sql recipe) and joins the corpus back to the final
-    level for the encode facet. The merge list itself is an
+    word column carried through (a MATERIALIZED CTE chain) and joins
+    the corpus back to the final level for the encode facet. The merge list itself is an
     operational constant (≤ 12 rows) collected like the quantile
     boundary literals."""
     from data_frame_spark.operators.bpe import bpe_encode, bpe_fit
@@ -5701,7 +5682,9 @@ _FIRST = [
 # unknown names, which in round 8 let the checked window shift and skip
 # the rotation entirely.
 _unknown_first = set(_FIRST) - set(QUERIES)
-assert not _unknown_first, f"_FIRST names not in QUERIES: {sorted(_unknown_first)}"
+if _unknown_first:
+    # explicit raise, not assert: python -O strips asserts
+    raise RuntimeError(f"_FIRST names not in QUERIES: {sorted(_unknown_first)}")
 
 _order = [n for n in _FIRST if n in QUERIES] + [n for n in QUERIES if n not in _FIRST]
 QUERIES = {n: QUERIES[n] for n in _order}

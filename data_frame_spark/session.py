@@ -11,6 +11,9 @@ local core count; on a real cluster it should be ~2-3x total cores
 from __future__ import annotations
 
 import os
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+from typing import Any, Callable
 
 from pyspark.sql import SparkSession
 
@@ -53,6 +56,48 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def run_facets(spark: SparkSession, facets: dict[str, Callable[[], Any]]) -> list:
+    """Run independent facet thunks concurrently, one thread each;
+    return their results in ``facets`` order.
+
+    A family query's facets build disjoint subtrees, and several of
+    them run Spark jobs while building (collects, eager checkpoints).
+    Building them from separate threads lets those jobs overlap
+    instead of leaving the cluster idle during each other's
+    round-trips. Results never depend on the schedule.
+
+    Every facet thread joins the caller's job group, with description
+    ``"<group>/<facet>"``, so the facets' jobs are counted and
+    cancelled with the caller's, and carries a job tag unique to this
+    call. The first facet that raises cancels its siblings' running
+    jobs by that tag, and its exception reaches the caller at once: the
+    caller does not wait for the siblings to finish.
+    """
+    sc = spark.sparkContext
+    group = sc.getLocalProperty("spark.jobGroup.id")
+    interrupt = sc.getLocalProperty("spark.job.interruptOnCancel") == "true"
+    tag = f"facets-{uuid.uuid4().hex}"
+
+    def in_thread(name: str, thunk: Callable[[], Any]) -> Any:
+        sc.setJobGroup(group, f"{group}/{name}" if group else name, interrupt)
+        sc.addJobTag(tag)
+        return thunk()
+
+    pool = ThreadPoolExecutor(max_workers=len(facets))
+    futures = [pool.submit(in_thread, name, fn) for name, fn in facets.items()]
+    try:
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f in done and f.exception() is not None:
+                raise f.exception()
+    except BaseException:
+        sc.cancelJobsWithTag(tag)
+        pool.shutdown(wait=False, cancel_futures=True)
+        raise
+    pool.shutdown()
+    return [f.result() for f in futures]
 
 
 TPCH_TABLES = (

@@ -1,8 +1,8 @@
-"""Round-12 wiring prep: prove the DuckDB oracle twins in
-``data_frame_spark/oracle_prep.py`` are bit-identical to the Spark
-operators on the REAL sf0.001 tables, before any registry slot opens.
-These are the exact SQL strings a future ``@query`` row will carry —
-registration becomes pure wiring once the `_FIRST` window rotates."""
+"""The DuckDB oracle twins in ``data_frame_spark/oracle_prep.py`` (and a
+few registered rows' ``ORACLE`` entries) are bit-identical to the Spark
+side on the REAL sf0.001 tables. Each checked SQL string is the oracle
+of a registered ``@query`` row, or the part of one that a single
+operator produces."""
 
 from __future__ import annotations
 
@@ -83,7 +83,13 @@ def test_bpe_oracle_matches_spark(spark, sf_dir, con):
         (r["rank"], r["left"], r["right"], r["pair_n"])
         for r in bpe_fit(docs, n_merges=12).orderBy("rank").collect()
     ]
-    want = sorted(con.execute(OP.bpe_oracle_sql(n_merges=12)).fetchall())
+    want = sorted(
+        con.execute(
+            "SELECT rank, \"left\", \"right\", pair_n FROM ("
+            + OP.bpe_family_oracle_sql(n_merges=12)
+            + ") WHERE facet = 'fit'"
+        ).fetchall()
+    )
     assert len(got) == 12  # corpus sustains every merge (oracle contract)
     assert got == want
 
@@ -240,32 +246,6 @@ def test_xml_corpus_family_oracle_matches_spark(spark, sf_dir, con):
     assert got == want
 
 
-def test_triangle_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["triangles"]
-        for r in OP.triangle_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.triangle_oracle_sql()).fetchall())
-    assert len(got) > 100
-    assert any(v > 0 for v in got.values())  # the graph closes triangles
-    # counts must discriminate (per-order cliques of different sizes)
-    assert len(set(got.values())) > 3
-    assert got == want
-
-
-def test_lpa_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["label"]
-        for r in OP.lpa_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.lpa_oracle_sql(iterations=4)).fetchall())
-    assert len(got) > 100
-    # propagation actually happened: most nodes no longer self-label
-    moved = sum(1 for n, l in got.items() if n != l)
-    assert moved > len(got) // 2
-    assert got == want
-
-
 def test_orc_roundtrip_oracle_matches_spark(spark, sf_dir, con):
     out = OP.orc_roundtrip_spark(spark, sf_dir)
     cols = out.columns
@@ -318,40 +298,6 @@ def test_format_roundtrip_family_oracle_matches_spark(spark, sf_dir, con):
         con.execute(OP.format_roundtrip_family_oracle_sql()).fetchall()
     )
     assert len(got) > 80 and len({row[0] for row in got}) == 2
-    assert got == want
-
-
-def test_bfs_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["hops"] for r in OP.bfs_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.bfs_oracle_sql(max_hops=4)).fetchall())
-    assert len(got) > 100
-    # distances must actually spread (seeds at 0, suppliers at odd hops)
-    assert {0, 1, 2}.issubset(set(got.values()))
-    assert got == want
-
-
-def test_graph_suite_family_oracle_matches_spark(spark, sf_dir, con):
-    out = OP.graph_suite_family_spark(spark, sf_dir)
-    got = {
-        (r["facet"], r["node"]): r["value"] for r in out.collect()
-    }
-    want = {
-        (f, n): v
-        for f, n, v in con.execute(OP.graph_suite_family_oracle_sql()).fetchall()
-    }
-    assert len(got) > 300 and len({f for f, _ in got}) == 3
-    assert got == want
-
-
-def test_kcore_oracle_matches_spark(spark, sf_dir, con):
-    got = {
-        r["node"]: r["degree"]
-        for r in OP.kcore_spark(spark, sf_dir).collect()
-    }
-    want = dict(con.execute(OP.kcore_oracle_sql()).fetchall())
-    assert len(got) > 100  # a real surviving core, not a trivial wipeout
     assert got == want
 
 
@@ -486,15 +432,38 @@ def test_ppr_oracle_matches_spark(spark, sf_dir, con):
 
 
 def test_graph_suite_v2_oracle_matches_spark(spark, sf_dir, con):
-    # REGISTERED at r16 (graph_suite_family re-pointed here; the
-    # kcore facet folded into the suite, kcore row retired — the
-    # composition pin v2 == parents retired with it after holding
-    # through the r15 pre-proof)
     out = OP.graph_suite_v2_spark(spark, sf_dir)
     cols = [f.name for f in out.schema.fields]
     got = sorted(tuple(r[c] for c in cols) for r in out.collect())
     want = sorted(con.execute(OP.graph_suite_v2_oracle_sql()).fetchall())
-    assert len({row[0] for row in got}) == 4
+    facets = {}
+    for facet, node, value in got:
+        facets.setdefault(facet, {})[node] = value
+    tri, lpa = facets["triangles"], facets["lpa_label"]
+    hops, kcore = facets["bfs_hops"], facets["kcore_degree"]
+    assert len(facets) == 4 and min(map(len, facets.values())) > 100
+    assert any(v > 0 for v in tri.values())  # the graph closes triangles
+    # counts must discriminate (per-order cliques of different sizes)
+    assert len(set(tri.values())) > 3
+    # propagation actually happened: most nodes no longer self-label
+    assert sum(1 for n, lab in lpa.items() if n != lab) > len(lpa) // 2
+    # distances must actually spread (seeds at 0, suppliers at odd hops)
+    assert {0, 1, 2}.issubset(set(hops.values()))
+    assert len(kcore) > 100  # a real surviving core, not a trivial wipeout
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "name", ["asof_multi_value_lookup", "interpolated_lookup_value"]
+)
+def test_lookup_rows_match_their_oracles(spark, sf_dir, con, name):
+    from data_frame_spark.queries import ORACLE, QUERIES
+
+    out = QUERIES[name](spark, sf_dir)
+    cols = [f.name for f in out.schema.fields]
+    got = sorted(tuple(r[c] for c in cols) for r in out.collect())
+    want = sorted(tuple(row) for row in con.execute(ORACLE[name]).fetchall())
+    assert len(got) > 10
     assert got == want
 
 
@@ -565,47 +534,6 @@ def test_binary_features_leg_guard():
         OP.binary_features_leg(None, "", "nope")
 
 
-def test_lookup_family_oracle_matches_spark(spark, sf_dir, con):
-    # r19 funding-merge candidate (pre-proven r17): asof +
-    # interpolated lookup on one NULL-superset row
-    out = OP.lookup_family_spark(spark, sf_dir)
-    cols = [f.name for f in out.schema.fields]
-    got = sorted(
-        tuple(r[c] for c in cols) for r in out.collect()
-    )
-    want = sorted(
-        tuple(row) for row in con.execute(
-            OP.lookup_family_oracle_sql()
-        ).fetchall()
-    )
-    assert len(got) > 20 and len({row[0] for row in got}) == 2
-    assert got == want
-
-
-def test_lookup_family_leg_sqls_are_the_registered_oracles():
-    from data_frame_spark.queries import ORACLE
-
-    legs = OP._lookup_family_leg_sqls()
-    assert legs["asof"] == ORACLE["asof_multi_value_lookup"]
-    assert legs["interpolated"] == ORACLE["interpolated_lookup_value"]
-
-
-def test_dq_verify_oracle_matches_spark(spark, sf_dir, con):
-    # r19+ new-surface candidate (pre-proven r17): Deequ-style
-    # declarative data-quality verification over orders + the
-    # customer FK — three rules fire on the fixture, three pass
-    out = OP.dq_verify_spark(spark, sf_dir)
-    cols = [f.name for f in out.schema.fields]
-    got = sorted(tuple(r[c] for c in cols) for r in out.collect())
-    want = sorted(
-        tuple(row) for row in con.execute(OP.dq_oracle_sql()).fetchall()
-    )
-    assert len(got) == 6
-    fired = {row[0] for row in got if not row[-1]}
-    assert fired == {"totalprice_range", "status_domain", "custkey_unique"}
-    assert got == want
-
-
 def test_fits_family_v2_oracle_matches_spark(spark, sf_dir, con):
     # registered r18 (slot-funding merge, net -1; funded
     # binary_file_ingest + psi_value_drift)
@@ -655,4 +583,3 @@ def test_psi_drift_oracle_matches_spark(spark, sf_dir, con):
     # shift unit test in tests/test_drift.py pins that side)
     assert all(0 < r[-1] < 500_000 for r in got)
     assert got == want
-
